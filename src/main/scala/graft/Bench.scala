@@ -75,31 +75,6 @@ object Bench {
       .start().waitFor()
   }
 
-  private def session(cpus: Int): SparkSession = {
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // shuffle + spill files on tmpfs: round 1 moved only the SINKS off the shared
-      // disk; shuffle blocks still hit /tmp on /dev/vda, whose writeback storms were
-      // the dominant run-to-run variance (a cluster shuffles to per-executor disks)
-      .config("spark.local.dir", localDir)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def localDir: String =
-    if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_bench_local"
-    else "/tmp/graft_bench_local"
-
   /** The scale-configured pipeline: identical operators to the correctness path, with
     * the SURVEY-documented 10^12-row knob engaged — `mineSampleLimit` bounds the rows
     * the mine exchange moves per length group (templates saturate after a bounded
@@ -189,9 +164,7 @@ object Bench {
     // landed a 149.8 s N run in an 82 s field — the outlier class tmpfs removes),
     // not I/O realism. A real cluster reads from per-executor-striped distributed
     // storage, which a single shared noisy virtio disk does not model either.
-    val work = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR",
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_bench"
-      else "/tmp/graft_bench")
+    val work = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", s"${LocalSpark.scratchBase}/graft_bench")
     val nPages = WebPagesGen.pagesForSfDir(sfDir)
     // Scaling input = the sf page count (mult 1). Round 2 defaulted this to 2×
     // (400k pages measured 0.939 with a 3× tighter spread than 200k's 0.74–0.86,
@@ -204,7 +177,7 @@ object Bench {
     val pagesPath = s"$work/input/web_pages_$scalePages"
 
     // ---- materialize input once (fixed seed; reused at both parallelism levels)
-    var spark = session(cpus)
+    var spark = LocalSpark.session(cpus)
     val fs = new org.apache.hadoop.fs.Path(pagesPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(pagesPath, "_SUCCESS")))
@@ -225,7 +198,7 @@ object Bench {
     // from exactly that. Interleaving gives both levels the same draw of conditions,
     // so disturbances cancel in the ratio instead of landing on one side.
     def timedRun(level: Int, tag: String): Double = {
-      spark = session(level)
+      spark = LocalSpark.session(level)
       pinCpus(level)
       // Full collection OUTSIDE the timed window (round 5): the JVM is long-lived
       // across reps, so garbage from the PREVIOUS run (shuffle buffers, parquet
@@ -302,7 +275,7 @@ object Bench {
     def arr(xs: scala.collection.Seq[Double]) = xs.map(x => f"$x%.2f").mkString("[", ",", "]")
 
     // ---- per-query timings at full parallelism (driver contract) -------------
-    spark = session(cpus)
+    spark = LocalSpark.session(cpus)
     val queriesToRun = if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES"))
       Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
     else SparkEntry.queries

@@ -48,15 +48,17 @@ object LogCluster {
     */
   def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame = {
     val spark = lines.sparkSession
-    // Blank lines trim to "" and are dropped up front (their split yields the
-    // empty token, whose frequency would collapse ambiguously in the
-    // space-joined cluster key — round-3 ADVICE fix); non-blank trimmed lines
-    // cannot produce "" tokens.
+    // The empty token must never reach word support: its frequency would
+    // collapse ambiguously in the space-joined cluster key. Spark's trim strips
+    // only ' ', so a tab- or CR-bordered line still splits on \s+ to a leading
+    // or trailing "" — drop those tokens, and with them the lines that hold
+    // nothing else (blank or whitespace-only).
     val dl = lines
       .select(trim(col(lineCol)).as("line"))
       .filter(col("line") =!= "")
       .groupBy("line").agg(count(lit(1)).as("cnt"))
-      .withColumn("toks", split(col("line"), "\\s+"))
+      .withColumn("toks", array_remove(split(col("line"), "\\s+"), ""))
+      .filter(size(col("toks")) > 0)
       .persist()
 
     // support = lines containing the word, counted once per line

@@ -421,17 +421,7 @@ object LogPipeline {
     * owns unpersist (dropping the returned DataFrame releases it with the session).
     */
   def assignAll(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig)
-      : (MatchCatalog, DataFrame) = {
-    val p = new LogPipeline(cfg)
-    val maskedRaw = p.withMasked(p.structure(p.explodeLines(pages)))
-    val masked = if (sys.env.contains("GRAFT_NO_PERSIST")) maskedRaw
-      else maskedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val drain = p.mineDrain(masked)
-    val spell = p.mineSpellResidue(masked, drain)
-    val catalog = new MatchCatalog(drain, spell)
-    val bc = spark.sparkContext.broadcast(catalog)
-    (catalog, p.matchPhase(masked, bc))
-  }
+      : (MatchCatalog, DataFrame) = assign(spark, pages, cfg, narrow = false)
 
   /** [[assignAll]] for consumers that only read
     * (url, line_no, event_id, event_template, matched_by) — the evaluator /
@@ -442,20 +432,25 @@ object LogPipeline {
     * the passthrough headers nor the parameter arrays are computed or cached
     * (round 6, guide §1.2 "don't compute things you throw away"). The mined
     * catalog is a pure function of `masked`, which is unchanged, so the
-    * catalog — and with it every projected column — is provably identical.
+    * catalog — and with it every projected column — is provably identical
+    * (PipelineSpec checks it).
     */
   def assignNarrow(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig)
-      : (MatchCatalog, DataFrame) = {
+      : (MatchCatalog, DataFrame) = assign(spark, pages, cfg, narrow = true)
+
+  private def assign(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
+                     narrow: Boolean): (MatchCatalog, DataFrame) = {
     val p = new LogPipeline(cfg)
-    val maskedRaw = p.withMasked(p.structure(p.explodeLines(pages)))
-      .select("url", "line_no", "parsed", "masked")
-    val masked = if (sys.env.contains("GRAFT_NO_PERSIST")) maskedRaw
-      else maskedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val structured = p.withMasked(p.structure(p.explodeLines(pages)))
+    val masked = (if (narrow) structured.select("url", "line_no", "parsed", "masked") else structured)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val drain = p.mineDrain(masked)
     val spell = p.mineSpellResidue(masked, drain)
     val catalog = new MatchCatalog(drain, spell)
     val bc = spark.sparkContext.broadcast(catalog)
-    (catalog, p.matchCore(masked, bc)
-      .select("url", "line_no", "event_id", "event_template", "matched_by"))
+    (catalog,
+      if (narrow) p.matchCore(masked, bc)
+        .select("url", "line_no", "event_id", "event_template", "matched_by")
+      else p.matchPhase(masked, bc))
   }
 }

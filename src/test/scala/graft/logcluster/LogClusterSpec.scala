@@ -56,6 +56,18 @@ class LogClusterSpec extends SparkSuite {
       "req *{1,1} tail POST /api done" -> 30L))
   }
 
+  test("tab- and CR-bordered lines mine the space-only corpus's catalog") {
+    val lines = Seq("user alice logged in", "user bob smith logged in", "user carol logged in",
+      "start end", "start mid end", "start a b end")
+    val expected = mined(lines, support = 3)
+    assert(expected == Map("user *{1,2} logged in" -> 3L, "start *{0,2} end" -> 3L))
+    val bordered = lines.zipWithIndex.map { case (l, i) =>
+      if (i % 2 == 0) s"\t$l" else s"$l\r"
+    } ++ Seq("\t", "\r", " \t\r ")
+    assert(mined(bordered, support = 3) == expected)
+    assert(mined(lines.map(l => s"\t$l\r"), support = 3) == expected)
+  }
+
   test("mineCatalog ids match the engine's md5-prefix event ids") {
     val cat = LogCluster.mineCatalog(
       Seq("up x1 ok", "up y2 ok").toDF("line"), "line", 2)

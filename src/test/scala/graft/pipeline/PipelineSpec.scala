@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.SparkSuite
 import graft.drain.DrainTree
 import graft.eval.Evaluator
-import graft.ingest.WebPagesGen
+import graft.ingest.{LogStyles, WebPagesGen}
 import graft.rex.RexCompiler
 import org.apache.spark.sql.functions._
 
@@ -87,6 +87,23 @@ class PipelineSpec extends SparkSuite {
     val k1 = a1.select("url", "line_no", "event_id", "event_template")
     assert(k4.exceptAll(k1).count() == 0)
     assert(k1.exceptAll(k4).count() == 0)
+  }
+
+  test("assignNarrow rows equal assignAll's projection (hdfs; android, with Spell residue)") {
+    val android = LogStyles.all.find(_.style.name == "android").get
+    val androidCfg = PipelineConfig(android.style.logFormat, android.style.rexes,
+      st = android.style.st, depth = android.style.depth)
+    val cols = Seq("url", "line_no", "event_id", "event_template", "matched_by")
+    for ((style, in, c) <- Seq(("hdfs", pages, cfg),
+        ("android", LogStyles.pagesFor(spark, android, 120).toDF(), androidCfg))) {
+      val all = LogPipeline.assignAll(spark, in, c)._2.select(cols.map(col): _*)
+      val narrow = LogPipeline.assignNarrow(spark, in, c)._2
+      assert(narrow.columns.toSeq == cols)
+      assert(narrow.count() == all.count(), style)
+      assert(narrow.exceptAll(all).isEmpty, style)
+      assert(all.exceptAll(narrow).isEmpty, style)
+      if (style == "android") assert(!narrow.filter(col("matched_by") === "spell").isEmpty)
+    }
   }
 
   test("enrich: broadcast join attaches region/tier for every row") {
